@@ -1,71 +1,19 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
-  /** ~100 whole-stage-codegen queries overflow the JDK default 240 MB code
-    * cache; when it fills the JIT disables itself and random queries run
-    * interpreted (measured 20-180x stalls). If this JVM was launched
-    * without the enlarged cache, re-exec the bench in a child JVM that has
-    * it, so the timing is meaningful no matter how we were invoked.
-    */
-  private def codeCacheBytes: Long =
-    java.lang.management.ManagementFactory.getMemoryPoolMXBeans.stream()
-      .filter(p => p.getName.contains("CodeCache") || p.getName.contains("CodeHeap"))
-      .mapToLong(p => p.getUsage.getMax).sum()
-
-  private def reexecWithFlags(args: Array[String]): Option[Int] = {
-    try {
-      val jvm = java.nio.file.Paths
-        .get(System.getProperty("java.home"), "bin", "java").toString
-      val opens = Seq(
-        "java.base/java.lang", "java.base/java.lang.invoke",
-        "java.base/java.lang.reflect", "java.base/java.io",
-        "java.base/java.net", "java.base/java.nio",
-        "java.base/java.util", "java.base/java.util.concurrent",
-        "java.base/java.util.concurrent.atomic",
-        "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-        "java.base/sun.security.action", "java.base/sun.util.calendar"
-      ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-      // GRAFT_SPILL_DEFAULTS=0 must silence the zstd -D flags here too:
-      // SparkConf reads -Dspark.* regardless of SpillDefaults skipping
-      // .config, so an ungated re-exec would make A/B "off" runs through
-      // Bench silently measure with zstd still enabled (r15 advisor).
-      val spill =
-        if (sys.env.get("GRAFT_SPILL_DEFAULTS").contains("0")) Seq.empty[String]
-        else SpillDefaults.configs.map { case (k, v) => s"-D$k=$v" }
-      val cmd = (Seq(jvm) ++ opens ++ spill ++ Seq(
-        "-XX:ReservedCodeCacheSize=1g", "-XX:+UseCodeCacheFlushing",
-        "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
-        s"-Xmx${sys.env.getOrElse("SPARK_DRIVER_MEM", "8g")}",
-        "-Dgraft.bench.child=1",
-        "-cp", System.getProperty("java.class.path"),
-        "graft.Bench") ++ args).toArray
-      val pb = new ProcessBuilder(cmd: _*).inheritIO()
-      Some(pb.start().waitFor())
-    } catch { case _: Throwable => None }
-  }
-
   def main(args: Array[String]): Unit = {
-    val isChild = sys.props.contains("graft.bench.child")
-    if (!isChild && codeCacheBytes < 512L * 1024 * 1024) {
-      reexecWithFlags(args) match {
-        case Some(code) => sys.exit(code)
-        case None       => runBench(args) // spawn failed — degrade gracefully
-      }
-    } else runBench(args)
-  }
-
-  private def runBench(args: Array[String]): Unit = {
+    // a JVM without the 1 GB code cache times interpreted queries (the JIT
+    // switches itself off once the 240 MB default fills: 20-180x stalls)
+    val codeCacheMb = GraftSession.codeCacheMb
+    if (codeCacheMb < 512) {
+      System.err.println(s"[bench] code cache is $codeCacheMb MB; " +
+        "launch with the flags of tools/jvm.flags (tools/run.sh or sbt run)")
+      sys.exit(2)
+    }
     // Optional args = subset of query keys (local iteration only; the
     // driver invokes with no args → full run).
     val keyFilter: Set[String] = args.toSet
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SpillDefaults(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Framework warm-up so the first timed query doesn't absorb one-time
     // init cost (parquet vectorized reader, codegen compiler, shuffle
@@ -79,31 +27,14 @@ object Bench {
     // reproduced their r3 times (pagerank 3.8 s vs 10.5 s in-sweep,
     // sim_brp_lsh 0.7 vs 5.7, txt_unicode_nfc 0.2 vs 1.8), so the 33%
     // old-key regression was JVM-state pollution accumulating across the
-    // 224x2 sweep, not plan changes. Two mechanisms, both fixed here:
-    // (1) localCheckpoint blocks are invisible to Dataset.unpersist AND
-    //     catalog.clearCache (CacheManager never sees checkpoint RDDs), so
-    //     every iterative op leaked its state blocks for the rest of the
-    //     JVM -> block-manager memory pressure on later queries. Sweep
-    //     them via getPersistentRDDs between queries (nothing cross-query
-    //     references them; gated indexes live as parquet, not blocks).
+    // sweep, not plan changes. Two mechanisms, both handled between keys,
+    // outside the timed region:
+    // (1) blocks a key left cached: GraftSession.sweep frees them;
     // (2) shuffle files + broadcasts are reclaimed by the ContextCleaner
     //     only when driver GC collects their references; with an 8 GB
     //     driver heap GC is rare, so ~450 executions of shuffle state pile
-    //     up. A periodic System.gc() (outside the timed region) drives the
-    //     cleaner.
+    //     up. A periodic System.gc() drives the cleaner.
     var sinceGc = 0
-    def sweepJvmState(): Unit = {
-      // blocking=true (r18): the async form let the previous key's cache
-      // blocks be removed DURING the next key's timed runs — with the
-      // graph tier now leaving lazy InMemoryRelation blocks, that bleed
-      // showed as multi-second in-sweep excursions on untouched stateful
-      // keys. The wait itself happens here, OUTSIDE the timed region, so
-      // the timing methodology is unchanged.
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      spark.catalog.clearCache()
-      sinceGc += 1
-      if (sinceGc >= 24) { sinceGc = 0; System.gc() }
-    }
     // Each query is timed twice and the MIN is reported: the r2 bench ran on
     // a contended host and a handful of queries absorbed 10-50 s of neighbor
     // noise (the same binary re-measured 5-60x faster on a quiet box). min
@@ -146,7 +77,9 @@ object Bench {
             0.0
         }
       }
-      sweepJvmState() // outside the timed region; see note above
+      GraftSession.sweep(spark) // outside the timed region; see note above
+      sinceGc += 1
+      if (sinceGc >= 24) { sinceGc = 0; System.gc() }
       name -> sec
     }
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Diagnostic main: dump `explain("formatted")` for the named registry keys
@@ -16,12 +15,7 @@ object ExplainKeys {
     val suffix = args(2)
     val keys = args.drop(3)
     java.nio.file.Files.createDirectories(outDir)
-    val spark = SpillDefaults(SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = GraftSession.builder(cpus = "4").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     for (k <- keys) {
       val plan = ops.Registry.queries(k)(spark, sfDir)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic fixture scaler — produce a larger scale factor from the
@@ -56,14 +56,9 @@ object GenFixtures {
   def main(args: Array[String]): Unit = {
     val Array(srcDir, outDir, mulStr) = args.take(3)
     val mul = mulStr.toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = GraftSession.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
       // keep o_orderdate/l_shipdate as TIMESTAMP(MICROS) like the source
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Diagnostic main: dump `explain("formatted")` for the headline queries to
@@ -135,12 +134,7 @@ object PlanDump {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SpillDefaults(SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = GraftSession.builder(cpus = "4").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     println("# PLANS -- explain(\"formatted\") of the headline queries")
     println()

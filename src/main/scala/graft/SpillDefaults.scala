@@ -6,11 +6,9 @@ import org.apache.spark.sql.SparkSession
   * (BASELINE.md): `zstd` shuffle/spill blocks + compressed RDD/checkpoint
   * blocks collapse the iterative Pregel keys' per-round spill from a 60 GB
   * ENOSPC peak to 8.7–17.2 GB at sf100 (~7×, 8–16 bytes/edge — edge-linear,
-  * ~9–17 MB/executor on a 1000-executor target). Harness-wide default since
-  * round 15: applied by every session builder (Verify/Bench/PlanDump/tests)
-  * and mirrored as -D flags in tools/run.sh + build.sbt fork options +
-  * Bench's re-exec, so decade sweeps and the driver's own bench inherit it
-  * no matter the entry path. RegistrySpec pins the live session values.
+  * ~9–17 MB/executor on a 1000-executor target). Applied by
+  * [[GraftSession.builder]], so every graft session carries it. RegistrySpec
+  * pins the values live in the test SparkContext.
   */
 object SpillDefaults {
   val configs: Seq[(String, String)] = Seq(
@@ -25,17 +23,6 @@ object SpillDefaults {
     // at 512 KB × concurrent streams is MBs/executor — standard practice.
     "spark.io.compression.zstd.bufferSize" -> "512k")
 
-  /** GRAFT_SPILL_DEFAULTS=0 disables the recipe for A/B codec measurement
-    * (how the r15 bench isolated the codec's own cost); never set by the
-    * driver, so the default path is always the recipe. Honored by every
-    * session builder, tools/run.sh, and Bench's code-cache re-exec — but
-    * NOT by the sbt path: build.sbt's fork javaOptions hard-code the four
-    * -Dspark.* flags, which SparkConf reads regardless of this method
-    * skipping .config. A/B "off" runs must go through tools/run.sh or a
-    * bare java -cp, never `sbt run`/`sbt test` (where RegistrySpec's
-    * session pin would also fail with the switch set, by design).
-    */
   def apply(b: SparkSession.Builder): SparkSession.Builder =
-    if (sys.env.get("GRAFT_SPILL_DEFAULTS").contains("0")) b
-    else configs.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
+    configs.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,13 +8,7 @@ object Verify {
     // Optional extra args = subset of query keys to run (local iteration
     // only; the driver always passes exactly two args → full run).
     val keyFilter: Set[String] = rest.toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SpillDefaults(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_VERIFY_COALESCE=0 keeps the write parallel (local scale
@@ -34,18 +27,10 @@ object Verify {
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // Free cached/checkpointed blocks between keys (Bench's
-      // sweepJvmState): persist-based iterative ops (LPA, kmeans) would
-      // otherwise stack their cache blocks across a 371-key sweep and
-      // squeeze execution memory at sf10/sf100. Own try/catch: a sweep
-      // failure (e.g. context torn down by a fatal op error) must cost
-      // only this key, matching the write's per-key error isolation.
-      try {
-        // blocking=true (r18, matching Bench.sweepJvmState): the async
-        // form let block removal bleed into the next key's execution
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-        spark.catalog.clearCache()
-      } catch { case e: Throwable =>
+      // Own try/catch: a sweep failure (e.g. context torn down by a fatal
+      // op error) must cost only this key, like the write's isolation.
+      try GraftSession.sweep(spark)
+      catch { case e: Throwable =>
         System.err.println(s"[verify] $name cache sweep failed: ${e.getMessage}")
       }
     }

@@ -858,8 +858,8 @@ object Aggs {
     * h_k=0 division identically in both engines; when a scope holds fewer
     * than k hashes the sketch IS the exact set). The per-type bottom-k runs
     * on the custom TopKPerKey operator — k-row bounded heaps per key, never
-    * a per-type sort — over the ONCE-collapsed distinct (type, user) pairs
-    * (checkpointed: they also feed the exact-count comparison), and the
+    * a per-type sort — over the distinct (type, hash) pairs, whose
+    * exchange both sketch consumers share at runtime, and the
     * cross-type merge is the textbook KMV union: k smallest of the unioned
     * sketch rows (k-min of k-min sets = k-min of the union), a TakeOrdered
     * over ≤ |types|·k rows. Emits per-scope exact vs estimate with error
@@ -881,9 +881,10 @@ object Aggs {
         .distinct()
       val lp = hashes.queryExecution.analyzed
       def attr(n: String) = lp.output.find(_.name == n).get
-      // NOT checkpointed: both consumers re-run the bounded-heap pass over
-      // the checkpointed in-memory pairs (no parquet re-scan), and the
-      // TopKPerKey node stays visible in the executed plan for the guard
+      // NOT checkpointed: the per-type and merged consumers each restate
+      // this subtree, and Spark's stage reuse computes its canonically
+      // identical distinct exchange once; the TopKPerKey node stays
+      // visible in the executed plan for the guard
       val topk = org.apache.spark.sql.GraftBridge.ofRows(s,
           graft.plans.TopKPerKey(128, Seq(attr("event_type")),
             Seq(SortOrder(attr("h"), Ascending)), lp))

@@ -867,7 +867,7 @@ object Graph {
           .groupBy(col("supp")).agg(sum(col("hub")).as("auth")),
         "supp", "auth")
       // cache blocks stay alive (the returned frame reads them lazily);
-      // Verify/Bench free them via sweepJvmState between queries, the
+      // Verify/Bench free them via GraftSession.sweep between queries, the
       // same lifecycle as sim_containment_pairs' shingle checkpoint.
       a2.orderBy(col("auth").desc, col("supp")).limit(15)
     },

@@ -1132,8 +1132,9 @@ object MLPipeline {
     * NDCG = DCG over the ranker's top-10 ÷ DCG over the ideal
     * (relevance-ordered) top-10, per lang. BOTH top-10s run on the custom
     * TopKPerKey operator — ranking eval never sorts the corpus, it keeps
-    * a 10-row heap per language — over the once-scanned, checkpointed
-    * scored relation; the gain/discount terms ((2^rel−1)/log2(rank+1))
+    * a 10-row heap per language — over the scored relation: both heaps
+    * restate its scan and share its lang exchange, which Spark's stage
+    * reuse computes once; the gain/discount terms ((2^rel−1)/log2(rank+1))
     * ride the ≤10·|langs| heap output through the DECIMAL(18,12)-sum +
     * round-6 discipline. IDCG NULLIF-guarded (an all-irrelevant segment
     * yields NULL, not a crash).

@@ -18,12 +18,9 @@ object Registry {
     * tier's edge caches, dedup_cc/sem_dedup's docs cache, …) — they are
     * deliberately NOT unpersisted inside the op, because an in-op
     * blocking unpersist re-introduces the per-query driver stall the r18
-    * conversions removed. Bench and Verify sweep ALL persistent RDDs and
-    * the SQL cache between keys (`sweepJvmState`); any OTHER embedder
-    * that runs these queries in sequence must do the same
-    * (`spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true));
-    * spark.catalog.clearCache()`) or cache blocks accumulate across
-    * queries.
+    * conversions removed. Bench and Verify call [[graft.GraftSession.sweep]]
+    * between keys; any OTHER embedder that runs these queries in sequence
+    * must do the same or cache blocks accumulate across queries.
     */
   lazy val all: Vector[Op] =
     Scans.ops ++ Filters.ops ++ Joins.ops ++ Aggs.ops ++ Windows.ops ++

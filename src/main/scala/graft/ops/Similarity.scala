@@ -2367,10 +2367,12 @@ object Similarity {
         .filter(col("bn") >= 2 && col("bn") <= 64)
         .select(col("bk"))
       // SHUFFLE_HASH on the kept-blocks side (r19 A/B, interleaved pairs:
-      // 1.10/2.00/1.24 s sort-merge -> 0.91/1.10/0.87 s shuffled-hash —
+      // 1.10/2.00/1.24 s unhinted -> 0.91/1.10/0.87 s shuffled-hash —
       // hint-better in every pair): ok is one row per surviving block —
-      // trivially hash-buildable per partition — while sort-merge sorted
-      // the FULL doubled block list; at 100 TB the build side stays
+      // trivially hash-buildable per partition. Unhinted, the sf0.1 plan
+      // was a BroadcastHashJoin (ok collected and broadcast from the
+      // driver); at scale it would be a sort-merge join sorting the FULL
+      // doubled block list. At 100 TB the build side stays
       // block-count-bounded so the per-partition hash map cannot blow up
       val pruned = blocks.join(ok.hint("shuffle_hash"), "bk")
       val cand = pruned.select(col("bk"), col("doc_id").as("a_id"), col("pre").as("pa"))

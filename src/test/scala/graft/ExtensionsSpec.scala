@@ -21,11 +21,9 @@ class ExtensionsSpec extends AnyFunSuite {
     val prev = SparkSession.getDefaultSession
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    // GraftSession's settings: when this suite runs first, this builder
+    // creates the SparkContext every later suite shares
+    val s = GraftSession.builder(cpus = "4")
       .withExtensions(new GraftExtensions)
       .getOrCreate()
     try f(s)

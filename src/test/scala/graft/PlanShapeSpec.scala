@@ -16,7 +16,7 @@ class PlanShapeSpec extends AnyFunSuite {
     * sim_containment_pairs) run those eager Spark jobs during plan
     * construction and may leave checkpoint blocks persisted for the
     * session — acceptable in a test JVM; Verify/Bench free them via
-    * GraftBridge/sweepJvmState.
+    * GraftBridge/GraftSession.sweep.
     */
   private def plan(name: String): String =
     Registry.queries(name)(spark, sf).queryExecution.executedPlan.toString
@@ -730,6 +730,10 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
       s"blocking must keep pairing an equi-join: $p")
     assert(p.contains("levenshtein"), p)
+    // the shuffle_hash hint on the kept-blocks side, once per side of the
+    // pair self-join
+    assert(p.linesIterator.count(_.contains("ShuffledHashJoin")) == 2,
+      s"the block prune must be a ShuffledHashJoin: $p")
   }
 
   test("join_bucketed_colocated joins without shuffling either fact side") {
@@ -771,8 +775,13 @@ class PlanShapeSpec extends AnyFunSuite {
     // identical exchange is computed once at runtime via stage reuse.
     val p = plan("agg_kmv_distinct")
     assert(p.contains("TopKPerKey "), s"custom strategy did not plan the node: $p")
+    // one events scan per consumer subtree: (1) the per-type bottom-k
+    // (TopKPerKey over the (type, hash) distinct), (2) the per-type exact
+    // count over the (type, user) distinct, (3) the merged sketch (the
+    // same TopKPerKey subtree as (1), then TakeOrdered) and (4) the merged
+    // exact count over the user distinct
     val scans = p.linesIterator.count(_.contains("Scan parquet"))
-    assert(scans >= 1 && scans <= 4,
+    assert(scans == 4,
       s"pair consumers must re-state the shared distinct, not checkpoint ($scans): $p")
   }
 

@@ -84,10 +84,21 @@ class RegistrySpec extends AnyFunSuite {
 
   test("zstd spill-encoding defaults are live in the session (r14 recipe is harness default)") {
     // BASELINE.md round-14: zstd spill blocks turn the graph tier's 60 GB
-    // sf100 ENOSPC into an 8.7–17.2 GB peak. SpillDefaults applies the
-    // recipe in every builder; this pin fails if a builder drops it.
+    // sf100 ENOSPC into an 8.7–17.2 GB peak. GraftSession applies the
+    // recipe; this pin fails if a builder drops it. Spill compression is
+    // governed by the SparkContext's conf, not the session's.
+    val ctx = spark.sparkContext.getConf
     for ((k, v) <- SpillDefaults.configs)
-      assert(spark.conf.get(k) == v, s"$k != $v in the live session")
+      assert(ctx.get(k, "<unset>") == v, s"$k != $v in the live SparkContext")
+    // the forked test JVM was launched with the one flags list that
+    // build.sbt and tools/run.sh both read
+    val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments
+    val flags = java.nio.file.Files.readAllLines(java.nio.file.Paths.get("tools/jvm.flags"))
+      .toArray(Array.empty[String]).map(_.trim).filter(l => l.nonEmpty && !l.startsWith("#"))
+    assert(flags.nonEmpty, "tools/jvm.flags lists no flags")
+    for (f <- flags) assert(jvmArgs.contains(f), s"test JVM not launched with $f: $jvmArgs")
+    assert(GraftSession.codeCacheMb >= 512,
+      s"test JVM code cache is ${GraftSession.codeCacheMb} MB, below Bench's 512 MB floor")
   }
 
   test("entry returns rows on sf0.001 (t1 smoke)") {

@@ -2,19 +2,15 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared session for all suites (mirrors Verify's config). */
+/** One shared session for all suites (Verify's config on 4 cores). */
 object TestSession {
   val sf = "/root/testdata/sf0.001"
 
   lazy val spark: SparkSession = {
-    val s = SpillDefaults(SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
+    val s = GraftSession.builder(cpus = "4")
       // plan-shape guards read PushedFilters/DataFilters out of the plan
       // string; the 100-char default truncates longer filter lists
       .config("spark.sql.maxMetadataStringLength", "2000")
-      .config("spark.ui.enabled", "false"))
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -20,9 +20,17 @@ python3 - "$LABEL" <<'EOF'
 import json, sys
 lab = sys.argv[1]
 runs = [json.loads(l) for l in open(f"/tmp/ab/{lab}.jsonl") if l.strip()]
-keys = list(runs[0]["queries"]) if runs else []
+# a failed key reads 0.0 in Bench's "queries": a run with any failure is
+# excluded, so a broken variant can never read as the fastest leg
+bad = [r for r in runs if r.get("failures")]
+for r in bad:
+    print(f"!! {lab}: EXCLUDED a run with failures {r['failures']}", file=sys.stderr)
+runs = [r for r in runs if not r.get("failures")]
+if not runs:
+    sys.exit(f"!! {lab}: no run without failures")
+keys = list(runs[0]["queries"])
 mins = {k: min(r["queries"][k] for r in runs) for k in keys}
-print(f"== {lab}: {len(runs)} runs, min-merged ==")
+print(f"== {lab}: {len(runs)} runs, min-merged" + (f", {len(bad)} EXCLUDED for failures" if bad else "") + " ==")
 for k in keys: print(f"  {k}: {mins[k]:.3f}  (" + ", ".join(f"{r['queries'][k]:.2f}" for r in runs) + ")")
 print(f"  TOTAL(min-merged): {sum(mins.values()):.2f}")
 EOF

@@ -4,22 +4,9 @@
 #        SPARK_GRAFT_SF_DIR=... tools/run.sh graft.Bench
 set -e
 CLS="$1"; shift
-# zstd spill-encoding defaults (see graft.SpillDefaults); GRAFT_SPILL_DEFAULTS=0
-# disables for A/B codec measurement only
-SPILL_FLAGS="-Dspark.io.compression.codec=zstd -Dspark.rdd.compress=true -Dspark.checkpoint.compress=true -Dspark.io.compression.zstd.bufferSize=512k"
-if [ "${GRAFT_SPILL_DEFAULTS:-1}" = "0" ]; then SPILL_FLAGS=""; fi
-OPENS=""
-for p in java.base/java.lang java.base/java.lang.invoke java.base/java.lang.reflect \
-         java.base/java.io java.base/java.net java.base/java.nio java.base/java.util \
-         java.base/java.util.concurrent java.base/java.util.concurrent.atomic \
-         java.base/sun.nio.ch java.base/sun.nio.cs java.base/sun.security.action \
-         java.base/sun.util.calendar; do
-  OPENS="$OPENS --add-opens $p=ALL-UNNAMED"
-done
-exec java $OPENS \
-  -XX:ReservedCodeCacheSize=1g -XX:+UseCodeCacheFlushing \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  ${SPILL_FLAGS} \
+# the JVM flags shared with build.sbt, one per line
+FLAGS=$(grep -v -e '^[[:space:]]*#' -e '^[[:space:]]*$' "$(dirname "$0")/jvm.flags")
+exec java $FLAGS \
   -Xmx"${SPARK_DRIVER_MEM:-8g}" \
   -cp "${GRAFT_CLASSES:-/root/repo/target/scala-2.13/classes:/root/repo/target/scala-2.13/test-classes}:/opt/spark/jars/*" \
   "$CLS" "$@"
