@@ -1,48 +1,25 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** Session-extension entry point: inject graft's native functions at
-  * session build time —
+import graft.functions.{
+  CharNGrams, HashFold, MattrSumTypes, Md5Fold48, NGrams, Simhash60, Sketch60,
+  SrpSketch60, TokenNGrams, UnicodeNorm, UnicodeNormalize, VectorDot}
+
+/** Session-extension entry point: inject graft's native functions, the
+  * TopKPerKey planner strategy and the two optimizer rules at session
+  * build time —
   *
   *   spark.sql.extensions=graft.GraftExtensions
   *
-  * (equivalently `.withExtensions(new GraftExtensions)`), making `vec_dot`
-  * available to pure-SQL users on every session without the runtime
-  * registration the ops perform for themselves.
+  * (equivalently `.withExtensions(new GraftExtensions)`), making every
+  * function in [[GraftExtensions.functions]] available to pure-SQL users.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[functions.VectorDot].getName, "vec_dot"),
-      functions.VectorDot.builder))
-    ext.injectFunction((
-      FunctionIdentifier("token_ngrams"),
-      new ExpressionInfo(classOf[functions.TokenNGrams].getName, "token_ngrams"),
-      functions.NGrams.tokenBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("char_ngrams"),
-      new ExpressionInfo(classOf[functions.CharNGrams].getName, "char_ngrams"),
-      functions.NGrams.charBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("unicode_norm"),
-      new ExpressionInfo(classOf[functions.UnicodeNormalize].getName, "unicode_norm"),
-      functions.UnicodeNorm.builder))
-    ext.injectFunction((
-      FunctionIdentifier("simhash60"),
-      new ExpressionInfo(classOf[functions.Simhash60].getName, "simhash60"),
-      functions.Sketch60.simhashBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("srp_sketch60"),
-      new ExpressionInfo(classOf[functions.SrpSketch60].getName, "srp_sketch60"),
-      functions.Sketch60.srpBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("md5fold48"),
-      new ExpressionInfo(classOf[functions.Md5Fold48].getName, "md5fold48"),
-      functions.HashFold.builder))
+    GraftExtensions.functions.foreach(ext.injectFunction)
     // declarative aggregate(zip_with(...)) dot products fuse into the
     // codegen'd VectorDot automatically (exact-semantics rewrite)
     ext.injectOptimizerRule(_ => functions.DotProductFusion)
@@ -51,5 +28,45 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // the operator, shrinking the shuffle map-side)
     ext.injectPlannerStrategy(_ => plans.TopKStrategy)
     ext.injectOptimizerRule(_ => plans.PushFilterThroughTopKPerKey)
+  }
+}
+
+object GraftExtensions {
+  private def fn(name: String, cls: Class[_], builder: Seq[Expression] => Expression) =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), builder)
+
+  /** The one list of graft's native functions: injected at session build
+    * by [[GraftExtensions.apply]], registered on a live session by
+    * [[install]]. */
+  val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
+    fn("vec_dot", classOf[VectorDot], VectorDot.builder),
+    fn("token_ngrams", classOf[TokenNGrams], NGrams.tokenBuilder),
+    fn("char_ngrams", classOf[CharNGrams], NGrams.charBuilder),
+    fn("unicode_norm", classOf[UnicodeNormalize], UnicodeNorm.builder),
+    fn("simhash60", classOf[Simhash60], Sketch60.simhashBuilder),
+    fn("srp_sketch60", classOf[SrpSketch60], Sketch60.srpBuilder),
+    fn("md5fold48", classOf[Md5Fold48], HashFold.builder),
+    fn("mattr_sum_types", classOf[MattrSumTypes], MattrSumTypes.builder))
+
+  /** Give a live session what the registry's ops need: every function in
+    * [[functions]] and [[plans.TopKStrategy]] appended to
+    * `experimental.extraStrategies`. [[ops.Registry.queries]] calls this
+    * before each op; a second call changes nothing.
+    *
+    * Serialized on the session object: the strategy append is a read-
+    * modify-write on a plain var, so two threads installing concurrently
+    * (a parallel bench) could otherwise double-append or lose an unrelated
+    * strategy. A session built with [[GraftExtensions]] already plans
+    * TopKPerKey through the injected strategy and gets no second copy.
+    *
+    * The optimizer rules are not installed: no op needs them, and they
+    * rewrite user plans, so they stay opt-in via `spark.sql.extensions`.
+    */
+  def install(s: SparkSession): Unit = s.synchronized {
+    val registry = s.sessionState.functionRegistry
+    for ((id, info, builder) <- functions if !registry.functionExists(id))
+      registry.registerFunction(id, info, builder)
+    if (!s.sessionState.planner.strategies.contains(plans.TopKStrategy))
+      s.experimental.extraStrategies = s.experimental.extraStrategies :+ plans.TopKStrategy
   }
 }

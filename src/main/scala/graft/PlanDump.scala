@@ -76,7 +76,7 @@ object PlanDump {
     "agg_kmv_distinct" ->
       "codegen'd md5fold48 hash, TopKPerKey bottom-k heaps per type, TakeOrdered union merge",
     "ml_ndcg_at_k" ->
-      "twin TopKPerKey heaps (score-ranked and relevance-ranked) over one checkpointed scored relation",
+      "twin TopKPerKey heaps (score-ranked and relevance-ranked) over one scored relation whose lang exchange both heaps reuse",
     "sim_prefix_filter_join" ->
       "PPJoin: df-ordered prefixes + length filter in the join condition + positional ubound aggregate -- candidates pruned before the exact verify",
     "mm_audio_energy" ->
@@ -94,7 +94,7 @@ object PlanDump {
     "graph_hits" ->
       "two integer mutual-reinforcement rounds: per-side edge-key shuffle + map-side-combined sums, 1-row broadcast renorm scalars",
     "ml_gain_lift_deciles" ->
-      "gains deciles from the histogram: checkpointed score histogram, boundary window over <=11 rows, no corpus NTILE sort",
+      "gains deciles from the histogram: one score-histogram exchange shared by the totals and the boundary window, window over <=11 rows, no corpus NTILE sort",
     "scan_jdbc_pushdown" ->
       "JDBCRelation scan: both predicates compiled into the remote WHERE (PushedFilters) + numPartitions=4 range split -- the DB filters, the network carries survivors",
     "sink_jdbc_predictions" ->

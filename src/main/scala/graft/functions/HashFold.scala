@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -52,14 +51,6 @@ object HashFold {
         s"md5fold48(string) takes 1 argument, got ${args.length}")
     Md5Fold48(args.head)
   }
-
-  /** Idempotent session registration; use via
-    * `call_function("md5fold48", col)` — same pattern as
-    * [[VectorDot.register]].
-    */
-  def register(s: SparkSession): Unit =
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "md5fold48", builder, "built-in")
 }
 
 /** See [[HashFold.md5fold48]]. */

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -92,10 +91,4 @@ object MattrSumTypes {
         s"mattr_sum_types(array<string>, w) takes 2 arguments, got ${args.length}")
     MattrSumTypes(args(0), args(1))
   }
-
-  /** Idempotent session registration; use via
-    * `call_function("mattr_sum_types", toks, lit(w))`. */
-  def register(s: SparkSession): Unit =
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "mattr_sum_types", builder, "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -169,15 +168,4 @@ object NGrams {
     arity2("token_ngrams(array<string>, n)", TokenNGrams(_, _))
   val charBuilder: Seq[Expression] => Expression =
     arity2("char_ngrams(string, n)", CharNGrams(_, _))
-
-  /** Register both as temp functions on the session (idempotent); use via
-    * `call_function("token_ngrams", arr, lit(2))` — same pattern as
-    * [[VectorDot.register]].
-    */
-  def register(s: SparkSession): Unit = {
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "token_ngrams", tokenBuilder, "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "char_ngrams", charBuilder, "built-in")
-  }
 }

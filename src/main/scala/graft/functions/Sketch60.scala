@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -118,11 +117,6 @@ object Sketch60 {
     sk
   }
 
-  private def regOne(s: SparkSession, name: String,
-                     builder: Seq[Expression] => Expression): Unit =
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, builder, "built-in")
-
   val simhashBuilder: Seq[Expression] => Expression = { args =>
     if (args.length != 1)
       throw new IllegalArgumentException(
@@ -135,12 +129,6 @@ object Sketch60 {
       throw new IllegalArgumentException(
         s"srp_sketch60(array<bigint>) takes 1 argument, got ${args.length}")
     SrpSketch60(args.head)
-  }
-
-  /** Register `simhash60` and `srp_sketch60` on the session (idempotent). */
-  def register(s: SparkSession): Unit = {
-    regOne(s, "simhash60", simhashBuilder)
-    regOne(s, "srp_sketch60", srpBuilder)
   }
 }
 

@@ -2,7 +2,6 @@ package graft.functions
 
 import java.text.Normalizer
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -80,12 +79,4 @@ object UnicodeNorm {
         s"unicode_norm(string, form) takes 2 arguments, got ${args.length}")
     UnicodeNormalize(args(0), args(1))
   }
-
-  /** Register as a temp function (idempotent) — use via
-    * `call_function("unicode_norm", c, lit("NFC"))`; same pattern as
-    * [[VectorDot.register]] / [[NGrams.register]].
-    */
-  def register(s: SparkSession): Unit =
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "unicode_norm", builder, "built-in")
 }

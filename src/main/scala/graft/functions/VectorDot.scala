@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -81,9 +80,9 @@ case class VectorDot(left: Expression, right: Expression)
 }
 
 object VectorDot {
-  /** Arity-checked builder shared by runtime registration and
-    * GraftExtensions — a wrong argument count becomes an analysis-time
-    * error naming the signature, not an IndexOutOfBoundsException.
+  /** Arity-checked builder for GraftExtensions' function list — a wrong
+    * argument count becomes an analysis-time error naming the signature,
+    * not an IndexOutOfBoundsException.
     */
   val builder: Seq[Expression] => Expression = { args =>
     if (args.length != 2)
@@ -91,9 +90,4 @@ object VectorDot {
         s"vec_dot(array<float>, array<float>) takes 2 arguments, got ${args.length}")
     VectorDot(args(0), args(1))
   }
-
-  /** Register `vec_dot` as a temp function on the session (idempotent). */
-  def register(s: SparkSession): Unit =
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dot", builder, "built-in")
 }

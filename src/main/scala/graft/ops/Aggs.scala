@@ -870,24 +870,18 @@ object Aggs {
   val aggKmvDistinct = Op(
     "agg_kmv_distinct",
     (s, d) => {
-      import org.apache.spark.sql.catalyst.expressions.{Ascending, SortOrder}
-      graft.plans.TopKStrategy.ensureRegistered(s)
-      graft.functions.HashFold.register(s)
+      import org.apache.spark.sql.catalyst.expressions.Ascending
       val pairs = T.events(s, d)
         .select(col("event_type"), col("user_id")).distinct()
       val hashes = pairs
         .select(col("event_type"),
           call_function("md5fold48", col("user_id").cast("string")).as("h"))
         .distinct()
-      val lp = hashes.queryExecution.analyzed
-      def attr(n: String) = lp.output.find(_.name == n).get
       // NOT checkpointed: the per-type and merged consumers each restate
       // this subtree, and Spark's stage reuse computes its canonically
       // identical distinct exchange once; the TopKPerKey node stays
       // visible in the executed plan for the guard
-      val topk = org.apache.spark.sql.GraftBridge.ofRows(s,
-          graft.plans.TopKPerKey(128, Seq(attr("event_type")),
-            Seq(SortOrder(attr("h"), Ascending)), lp))
+      val topk = graft.plans.TopKPerKey.of(hashes, 128, Seq("event_type"), Seq("h" -> Ascending))
         .select(col("event_type"), col("h"))
       val perType = topk.groupBy(col("event_type").as("scope"))
         .agg(count(lit(1)).as("sketch_n"), max(col("h")).as("kth_h"))
@@ -965,9 +959,7 @@ object Aggs {
   val aggKmvIntersect = Op(
     "agg_kmv_intersect",
     (s, d) => {
-      import org.apache.spark.sql.catalyst.expressions.{Ascending, SortOrder}
-      graft.plans.TopKStrategy.ensureRegistered(s)
-      graft.functions.HashFold.register(s)
+      import org.apache.spark.sql.catalyst.expressions.Ascending
       val pairs = T.events(s, d)
         .filter(col("event_type").isin("click", "purchase"))
         .select(col("event_type"), col("user_id")).distinct()
@@ -976,11 +968,7 @@ object Aggs {
         .localCheckpoint(true)
       val hashes = pairs.select(col("event_type"),
         call_function("md5fold48", col("user_id").cast("string")).as("h"))
-      val lp = hashes.queryExecution.analyzed
-      def attr(n: String) = lp.output.find(_.name == n).get
-      val topk = org.apache.spark.sql.GraftBridge.ofRows(s,
-          graft.plans.TopKPerKey(128, Seq(attr("event_type")),
-            Seq(SortOrder(attr("h"), Ascending)), lp))
+      val topk = graft.plans.TopKPerKey.of(hashes, 128, Seq("event_type"), Seq("h" -> Ascending))
         .select(col("event_type"), col("h"))
         .localCheckpoint(true)
       val stats = topk.groupBy(col("event_type"))

@@ -739,10 +739,10 @@ object Graph {
     * each supplier's neighborhood": coeff(v) = 2·tri(v) / (deg(v)·(deg(v)−1))
     * over the same support-thresholded co-supply graph as
     * `graph_triangle_count`. The wedge-join triangle kernel and the degree
-    * aggregate both read the checkpointed `pairs` relation (the
-    * sim_prefix_filter_join fanout discipline: pairs feeds the self-join
-    * twice, the closing-edge probe, AND the degree agg — checkpoint once,
-    * never recompute the support self-join). All math is exact integer ppm
+    * aggregate both read the `pairs` relation through a lazy
+    * MEMORY_AND_DISK_SER persist (pairs feeds the self-join twice, the
+    * closing-edge probe, AND the degree agg — the first action fills the
+    * cache, so the support self-join runs once). All math is exact integer ppm
     * floor division, so the result is shuffle-order-independent. At 100 TB:
     * triangles shuffle on the wedge apex and the (u,v) probe key only; the
     * per-vertex join is |V|-sized. Global transitivity (3·closed/open

@@ -463,19 +463,12 @@ object MLPipeline {
   val samplePerGroup = Op(
     "sample_per_group",
     (s, d) => {
-      import org.apache.spark.sql.catalyst.expressions.{Ascending, SortOrder}
-      graft.plans.TopKStrategy.ensureRegistered(s)
+      import org.apache.spark.sql.catalyst.expressions.Ascending
       val ev = T.events(s, d)
         .select(col("event_type"), col("event_id"), col("user_id"))
         .withColumn("h", pmod(col("event_id") * lit(2654435761L), lit(4294967296L)))
-      val lp = ev.queryExecution.analyzed
-      def attr(n: String) = lp.output.find(_.name == n).get
-      val topk = graft.plans.TopKPerKey(
-        5,
-        Seq(attr("event_type")),
-        Seq(SortOrder(attr("h"), Ascending), SortOrder(attr("event_id"), Ascending)),
-        lp)
-      org.apache.spark.sql.GraftBridge.ofRows(s, topk)
+      graft.plans.TopKPerKey.of(ev, 5, Seq("event_type"),
+          Seq("h" -> Ascending, "event_id" -> Ascending))
         .select(col("event_type"), col("rn").as("pick"),
           col("event_id"), col("user_id"))
         .orderBy(col("event_type"), col("pick"))
@@ -961,11 +954,11 @@ object MLPipeline {
     * χ² would not hash-match; the numerator squares a value up to N², so
     * plain BIGINT overflows exactly at the documented scale — the
     * win_bollinger_bands widening discipline). One corpus scan: the
-    * label rides THROUGH the token explode, distinct (doc, token, y)
-    * pairs are checkpointed (they feed the per-token counts AND the
-    * global doc scalars), everything after is map-side-combined counts +
-    * a broadcast 1-row join. df ≥ 5 and df < N guard degenerate
-    * denominators. Top-20 tokens by χ² — the model-ready vocabulary cut.
+    * label rides THROUGH the token explode, the distinct (doc, token, y)
+    * pairs feed the per-token counts AND the global doc scalars (both
+    * restate the distinct and share its exchange at runtime), everything
+    * after is map-side-combined counts + a broadcast 1-row join. df ≥ 5
+    * and df < N guard degenerate denominators. Top-20 tokens by χ² — the model-ready vocabulary cut.
     */
   private val mlChi2FeatureSelect = Op(
     "ml_chi2_feature_select",
@@ -1142,8 +1135,7 @@ object MLPipeline {
   private val mlNdcgAtK = Op(
     "ml_ndcg_at_k",
     (s, d) => {
-      import org.apache.spark.sql.catalyst.expressions.{Ascending, Descending, SortOrder}
-      graft.plans.TopKStrategy.ensureRegistered(s)
+      import org.apache.spark.sql.catalyst.expressions.{Ascending, Descending}
       val scored = T.documents(s, d).select(
           col("doc_id"), col("lang"),
           when(instr(col("text"), "customer") > 0, 3L)
@@ -1156,20 +1148,18 @@ object MLPipeline {
                 + (length(text) - length(replace(text, 'order', ''))) div 5
                 + (length(text) - length(replace(text, 'pack', ''))) div 4
                 AS BIGINT)""").as("score"))
-      val lp = scored.queryExecution.analyzed
-      def attr(n: String) = lp.output.find(_.name == n).get
-      def top10(order: Seq[SortOrder]) =
-        org.apache.spark.sql.GraftBridge.ofRows(s,
-          graft.plans.TopKPerKey(10, Seq(attr("lang")), order, lp))
-      val dcg = top10(Seq(
-          SortOrder(attr("score"), Descending), SortOrder(attr("doc_id"), Ascending)))
+      // both heaps take the same `scored`, hence one analyzed plan and
+      // one shared lang exchange
+      def top10(by: String) =
+        graft.plans.TopKPerKey.of(scored, 10, Seq("lang"),
+          Seq(by -> Descending, "doc_id" -> Ascending))
+      val dcg = top10("score")
         .groupBy(col("lang"))
         .agg(round(sum(
           (expr("CAST(shiftleft(1L, CAST(rel AS INT)) - 1 AS DOUBLE)")
             / expr("log2(rn + 1)")).cast("decimal(18,12)"))
           .cast("double"), 6).as("dcg10"))
-      val idcg = top10(Seq(
-          SortOrder(attr("rel"), Descending), SortOrder(attr("doc_id"), Ascending)))
+      val idcg = top10("rel")
         .groupBy(col("lang"))
         .agg(round(sum(
           (expr("CAST(shiftleft(1L, CAST(rel AS INT)) - 1 AS DOUBLE)")
@@ -1511,8 +1501,9 @@ object MLPipeline {
     * division, so the apportionment is deterministic integer math in both
     * engines and telescopes to exactly P at b_10 (how grouped gains charts
     * are defined when ties span boundaries; a per-row NTILE would need a
-    * corpus-wide SinglePartition sort). The histogram is checkpointed once
-    * because it feeds both the totals scalar and the boundary window; all
+    * corpus-wide SinglePartition sort). The histogram feeds both the
+    * totals scalar and the boundary window; each restates the groupBy(s)
+    * aggregate and Spark computes its identical exchange once. All
     * windows run over ≤ max(|scores|, 11) rows. Long math holds to ~9e12
     * docs (P·1e6 < 2^63).
     */

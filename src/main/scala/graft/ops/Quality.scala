@@ -307,7 +307,6 @@ object Quality {
       // 48-bit md5 fold (digest's first 6 bytes big-endian) as the native
       // codegen'd expression; the oracle keeps the explicit strpos fold,
       // so equivalence is hash-checked right here
-      graft.functions.HashFold.register(s)
       def rowHash(canon: String) = s"md5fold48($canon)"
       val docs = T.documents(s, d)
         .withColumn("rh", expr(rowHash("concat_ws('|', doc_id, lang, source, text)")))

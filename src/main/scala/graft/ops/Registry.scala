@@ -13,7 +13,18 @@ final case class Op(
     oracle: Option[String])
 
 object Registry {
-  /** Cache-lifetime contract (r19, ADVICE r18): several ops leave LAZY
+  private lazy val all: Vector[Op] =
+    Scans.ops ++ Filters.ops ++ Joins.ops ++ Aggs.ops ++ Windows.ops ++
+      SetSort.ops ++ Scalars.ops ++ Text.ops ++ Similarity.ops ++
+      Streaming.ops ++ MLPipeline.ops ++ Udfs.ops ++ Multimodal.ops ++
+      TextAnalysis.ops ++ Events.ops ++ Graph.ops ++ Quality.ops ++
+      SqlShapes.ops
+
+  /** Every op by name. Each one first runs [[graft.GraftExtensions.install]]
+    * on its session, so graft's native functions and the TopKPerKey
+    * strategy are there whichever session the caller passes.
+    *
+    * Cache-lifetime contract (r19, ADVICE r18): several ops leave LAZY
     * `persist()` blocks behind after their action completes (the graph
     * tier's edge caches, dedup_cc/sem_dedup's docs cache, …) — they are
     * deliberately NOT unpersisted inside the op, because an in-op
@@ -22,18 +33,16 @@ object Registry {
     * between keys; any OTHER embedder that runs these queries in sequence
     * must do the same or cache blocks accumulate across queries.
     */
-  lazy val all: Vector[Op] =
-    Scans.ops ++ Filters.ops ++ Joins.ops ++ Aggs.ops ++ Windows.ops ++
-      SetSort.ops ++ Scalars.ops ++ Text.ops ++ Similarity.ops ++
-      Streaming.ops ++ MLPipeline.ops ++ Udfs.ops ++ Multimodal.ops ++
-      TextAnalysis.ops ++ Events.ops ++ Graph.ops ++ Quality.ops ++
-      SqlShapes.ops
-
   lazy val queries: Map[String, (SparkSession, String) => DataFrame] = {
     val dups = all.groupBy(_.name).collect { case (n, ops) if ops.size > 1 => n }
     require(dups.isEmpty,
       s"duplicate op names (toMap would silently shadow them): ${dups.mkString(", ")}")
-    all.map(o => o.name -> o.fn).toMap
+    all.map { o =>
+      o.name -> { (s: SparkSession, d: String) =>
+        graft.GraftExtensions.install(s)
+        o.fn(s, d)
+      }
+    }.toMap
   }
 
   lazy val oracles: Map[String, String] =

@@ -188,7 +188,6 @@ object Similarity {
   val simMinhashDet = Op(
     "sim_minhash_det",
     (s, d) => {
-      graft.functions.HashFold.register(s)
       val toks = T.documents(s, d)
         .filter(col("doc_id") < 200)
         .select(col("doc_id"), explode(split(col("text"), " ")).as("token"))
@@ -275,7 +274,6 @@ object Similarity {
   val simCosineKnn = Op(
     "sim_cosine_knn",
     (s, d) => {
-      graft.functions.VectorDot.register(s)
       val e = T.embeddings(s, d)
       val probes = e.filter(col("vec_id") < 10)
         .select(col("vec_id").as("probe_id"), col("embedding").as("pe"),
@@ -316,7 +314,6 @@ object Similarity {
   val simEmbedDedup = Op(
     "sim_embed_dedup",
     (s, d) => {
-      graft.functions.VectorDot.register(s)
       val e = T.embeddings(s, d).filter(col("vec_id") < 300)
       val a = e.select(col("vec_id").as("a_id"), col("embedding").as("ea"),
         norm(col("embedding")).as("na"))
@@ -382,7 +379,6 @@ object Similarity {
   val simShingleJaccard = Op(
     "sim_shingle_jaccard",
     (s, d) => {
-      graft.functions.NGrams.register(s)
       val sh = T.documents(s, d)
         .filter(col("doc_id") < 200)
         .select(col("doc_id"), col("source"), split(col("text"), " ").as("toks"))
@@ -584,7 +580,6 @@ object Similarity {
   val simSimhashBands = Op(
     "sim_simhash_bands",
     (s, d) => {
-      graft.functions.Sketch60.register(s)
       // Contract bound (the sim_prefix_filter_join precedent): this op is
       // the saturation DIAGNOSTIC, and on the closed 31-word vocabulary its
       // output grows quadratically (1.8 B rows at sf10 uncapped — beyond any
@@ -674,8 +669,6 @@ object Similarity {
   val simSimhashShingleBands = Op(
     "sim_simhash_shingle_bands",
     (s, d) => {
-      graft.functions.Sketch60.register(s)
-      graft.functions.NGrams.register(s)
       val sh = T.documents(s, d)
         .select(col("doc_id"), split(col("text"), " ").as("toks"))
         .filter(size(col("toks")) >= 2)
@@ -839,7 +832,6 @@ object Similarity {
   val simIvfKnn = Op(
     "sim_ivf_knn",
     (s, d) => {
-      graft.functions.VectorDot.register(s)
       val nList = 16
       val nProbe = 6
       val (assigned, centroids) = ivfIndex(s, d, nList)
@@ -890,7 +882,6 @@ object Similarity {
   val simIvfKnnDet = Op(
     "sim_ivf_knn_det",
     (s, d) => {
-      graft.functions.VectorDot.register(s)
       val x = T.embeddings(s, d)
         .select(col("vec_id"), posexplode(col("embedding")))
         .select(col("vec_id"), (col("pos") + 1).cast("long").as("dim"),
@@ -1011,7 +1002,6 @@ object Similarity {
   val serveHybridSearch = Op(
     "serve_hybrid_search",
     (s, d) => {
-      graft.functions.VectorDot.register(s)
       val lex = Scans.invertedIndex(s, d)
         .filter(col("token").isin("join", "filter", "group"))
         .groupBy(col("doc_id")).agg(count(lit(1)).as("n_terms"))
@@ -1302,7 +1292,6 @@ object Similarity {
   val semDedupClusters = Op(
     "sem_dedup_clusters",
     (s, d) => {
-      graft.functions.VectorDot.register(s)
       // k scales with the corpus (SemDeDup's own economics: N²/k is linear
       // only if k ∝ N) — target ~125 vectors/cluster so within-cluster
       // pair work stays ~125·N at any scale. Floor 16 keeps every fixture
@@ -1870,7 +1859,6 @@ object Similarity {
   val embSrpAnn = Op(
     "emb_srp_ann",
     (s, d) => {
-      graft.functions.Sketch60.register(s)
       // localCheckpoint: the persisted-sketch-index shape the scale path
       // wants anyway (built once, joined many times), and it keeps the
       // quantize/sketch projections out of the band join's re-evaluation
@@ -1905,7 +1893,6 @@ object Similarity {
       // fold: |q| <= ~2000 is float-exact, VectorDot accumulates in
       // double (exact under 2^53), so the BIGINT cast is the exact
       // integer dot
-      graft.functions.VectorDot.register(s)
       val qf = (c: Column) => transform(c, x => x.cast("float"))
       pairs
         .join(quant.select(col("vec_id").as("a_id"), qf(col("q")).as("qa")), "a_id")
@@ -1969,7 +1956,6 @@ object Similarity {
   val dedupNormalizedKey = Op(
     "dedup_normalized_key",
     (s, d) => {
-      graft.functions.UnicodeNorm.register(s)
       val docs = T.documents(s, d)
       val pre = docs.select(col("doc_id"), col("lang"),
         translate(col("text"), "e", "\u00e9").as("t"))
@@ -2025,7 +2011,6 @@ object Similarity {
   val embSrpRecall = Op(
     "emb_srp_recall",
     (s, d) => {
-      graft.functions.VectorDot.register(s)
       val qf = T.embeddings(s, d)
         .filter(col("vec_id") < 300)
         .select(col("vec_id"),
@@ -2141,7 +2126,6 @@ object Similarity {
   val simPrefixFilterJoin = Op(
     "sim_prefix_filter_join",
     (s, d) => {
-      graft.functions.NGrams.register(s)
       // Runtime signal when the contract bound truncates (r12, advisor):
       // a 1-row single-column max probe (metadata-scale, plan-time only) so
       // a future scale run cannot mistake the bounded result for
@@ -2249,7 +2233,6 @@ object Similarity {
   val simIvfPq = Op(
     "sim_ivf_pq",
     (s, d) => {
-      graft.functions.VectorDot.register(s)
       import org.apache.spark.ml.clustering.KMeans
       import org.apache.spark.ml.functions.array_to_vector
       val M = 4; val subDim = 16; val k = 16
@@ -2428,7 +2411,6 @@ object Similarity {
   private val simContainmentPairs = Op(
     "sim_containment_pairs",
     (s, d) => {
-      graft.functions.NGrams.register(s)
       // sh0 feeds both the df-cap aggregate and the probe side; sh feeds
       // FOUR subtrees (sizes + both sides of the self-join + the ratio
       // joins). Uncheckpointed, each consumer re-ran read->tokenize->
@@ -2513,7 +2495,6 @@ object Similarity {
   private val embMatryoshkaTrunc = Op(
     "emb_matryoshka_trunc",
     (s, d) => {
-      graft.functions.VectorDot.register(s)
       import org.apache.spark.sql.expressions.Window
       val q = T.embeddings(s, d)
         .filter(col("vec_id") < 300)
@@ -2620,7 +2601,6 @@ object Similarity {
     "sim_lsh_tuning_curve",
     (s, d) => {
       import s.implicits._
-      graft.functions.HashFold.register(s)
       // native codegen'd twin of the oracle's strpos fold (see HashFold)
       val hv = "md5fold48(concat(shingle, '#', CAST(h AS STRING)))"
       val sh = T.documents(s, d)
@@ -2874,7 +2854,6 @@ object Similarity {
   val simKnnClassify = Op(
     "sim_knn_classify",
     (s, d) => {
-      graft.functions.VectorDot.register(s)
       val W = org.apache.spark.sql.expressions.Window
       val e = T.embeddings(s, d)
       // probes feeds ONE broadcast — the old eager localCheckpoint here was

@@ -143,7 +143,6 @@ object Text {
   val txtNgrams = Op(
     "txt_ngrams",
     (s, d) => {
-      graft.functions.NGrams.register(s)
       T.documents(s, d)
         .select(col("doc_id"), split(col("text"), " ").as("toks"))
         .select(explode(
@@ -299,7 +298,6 @@ object Text {
   val txtCollocationPmi = Op(
     "txt_collocation_pmi",
     (s, d) => {
-      graft.functions.NGrams.register(s)
       val toks = tokens(s, d)
       val uni = toks.groupBy(col("token")).agg(count(lit(1)).as("uc"))
       val biAll = T.documents(s, d)

@@ -24,7 +24,6 @@ object TextAnalysis {
   val txtLangId = Op(
     "txt_lang_id",
     (s, d) => {
-      graft.functions.NGrams.register(s)
       val docs = T.documents(s, d).filter(length(col("text")) >= 2)
       // char bigrams via the native codegen'd char_ngrams expression (the
       // interpreted transform(sequence(...)) lambda it replaces ran twice
@@ -319,7 +318,6 @@ object TextAnalysis {
   val txtSubstringDedup = Op(
     "txt_substring_dedup",
     (s, d) => {
-      graft.functions.NGrams.register(s)
       val win = T.documents(s, d)
         .select(col("doc_id"), col("source"),
           explode(call_function("token_ngrams", split(col("text"), " "), lit(8)))
@@ -437,7 +435,6 @@ object TextAnalysis {
   val txtUnicodeNfc = Op(
     "txt_unicode_nfc",
     (s, d) => {
-      graft.functions.UnicodeNorm.register(s)
       T.documents(s, d)
         .withColumn("tok", split(col("text"), " ").getItem(0))
         .filter(length(col("tok")) >= 1)
@@ -635,7 +632,6 @@ object TextAnalysis {
   val txtRepetitionRatio = Op(
     "txt_repetition_ratio",
     (s, d) => {
-      graft.functions.NGrams.register(s)
       val perPair = T.documents(s, d)
         .select(col("doc_id"), col("lang"),
           explode(call_function("token_ngrams", split(col("text"), " "), lit(2)))
@@ -1147,7 +1143,6 @@ object TextAnalysis {
         size(split(col("text"), " ")).cast("long").as("tb"),
         concat(lit("|"), expr("replace(text, ' ', ' |')")).as("canon"))
     var merges = Vector.empty[(Int, String, Long)]
-    graft.functions.NGrams.register(s)
     for (r <- 1 to rounds) {
       // pair generation = the native codegen'd token_ngrams (n=2): the
       // interpreted transform(sequence(...)) lambda form measured ~2.5x
@@ -1722,7 +1717,6 @@ object TextAnalysis {
     "txt_winnowing",
     (s, d) => {
       import org.apache.spark.sql.expressions.Window
-      graft.functions.HashFold.register(s)
       val grams = T.documents(s, d)
         .select(col("doc_id"), split(col("text"), " ").as("toks"))
         .filter(size(col("toks")) >= 7)
@@ -1794,7 +1788,6 @@ object TextAnalysis {
     "txt_mattr_diversity",
     (s, d) => {
       val w = 25
-      graft.functions.MattrSumTypes.register(s)
       T.documents(s, d)
         .select(col("doc_id"), split(col("text"), " ").as("toks"))
         .filter(size(col("toks")) >= w)
@@ -1833,7 +1826,6 @@ object TextAnalysis {
     * shape. Used by both the weight report and the resampling op.
     */
   private def dsirScores(s: org.apache.spark.sql.SparkSession, d: String) = {
-    graft.functions.NGrams.register(s)
     val bg = T.documents(s, d)
       .select(col("doc_id"), col("lang"), split(col("text"), " ").as("toks"))
       .filter(size(col("toks")) >= 2)
@@ -2073,7 +2065,6 @@ object TextAnalysis {
   val txtCdcChunks = Op(
     "txt_cdc_chunks",
     (s, d) => {
-      graft.functions.HashFold.register(s)
       val docs = T.documents(s, d)
         .select(col("doc_id"), col("source"), split(col("text"), " ").as("toks"))
         .filter(size(col("toks")) > 0)

@@ -472,27 +472,19 @@ object Windows {
     * k-bounded heap state instead of WindowExec's full partition sort —
     * hash-checked against the identical ROW_NUMBER oracle, so the custom
     * operator is held to the exact same correctness bar as the built-ins.
-    * The strategy is registered idempotently on the session here;
-    * GraftExtensions users get it injected at session build.
+    * The strategy comes from GraftExtensions: `Registry.queries`
+    * installs it on the session before the op runs.
     */
   val winTopkHeap = Op(
     "win_topk_heap",
     (s, d) => {
-      import org.apache.spark.sql.catalyst.expressions.{Ascending, Descending, SortOrder}
-      graft.plans.TopKStrategy.ensureRegistered(s)
+      import org.apache.spark.sql.catalyst.expressions.{Ascending, Descending}
       val orders = T.orders(s, d)
         .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"))
-      val lp = orders.queryExecution.analyzed
-      def attr(n: String) = lp.output.find(_.name == n).get
-      val topk = graft.plans.TopKPerKey(
-        3,
-        Seq(attr("o_custkey")),
-        // total order: price desc, orderkey asc tiebreak — bounded eviction
-        // under a partial order would be nondeterministic
-        Seq(SortOrder(attr("o_totalprice"), Descending),
-          SortOrder(attr("o_orderkey"), Ascending)),
-        lp)
-      org.apache.spark.sql.GraftBridge.ofRows(s, topk)
+      // total order: price desc, orderkey asc tiebreak — bounded eviction
+      // under a partial order would be nondeterministic
+      graft.plans.TopKPerKey.of(orders, 3, Seq("o_custkey"),
+          Seq("o_totalprice" -> Descending, "o_orderkey" -> Ascending))
         .orderBy(col("o_custkey"), col("rn"))
     },
     Some("""

@@ -3,10 +3,11 @@ package graft.plans
 import scala.collection.mutable
 
 import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, GraftBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{
   Attribute, AttributeReference, AttributeSet, Expression, GenericInternalRow,
-  JoinedRow, SortOrder, UnsafeProjection}
+  JoinedRow, SortDirection, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.expressions.codegen.GenerateOrdering
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning}
@@ -31,9 +32,10 @@ import org.apache.spark.sql.types.LongType
   *     bounded eviction with a partial order would be nondeterministic);
   *     appends a `rn` column (1..k in order) to the child's output.
   *   - [[TopKStrategy]] (a [[SparkStrategy]]): maps it to the physical
-  *     node — registered per-session via `experimental.extraStrategies`
-  *     (idempotently, by the op that uses it) and usable through
-  *     `SparkSessionExtensions.injectPlannerStrategy` alike.
+  *     node — injected by [[graft.GraftExtensions]] at session build, or
+  *     appended to a live session's `experimental.extraStrategies` by
+  *     `GraftExtensions.install`, which `Registry.queries` runs before
+  *     every op.
   *   - physical [[TopKPerKeyExec]]: demands
   *     `ClusteredDistribution(key)` — EnsureRequirements/AQE insert the
   *     one hash exchange — then per partition keeps a k-bounded heap per
@@ -100,27 +102,29 @@ case class TopKPerKey(
     copy(child = newChild)
 }
 
+object TopKPerKey {
+  /** `df` with an `rn` column (1..k): its top `k` rows per `keys` under
+    * `order`, given as (column, direction) pairs that must form a TOTAL
+    * order per key. Every call on the same `df` reuses its one analyzed
+    * plan, so several heaps over one frame share its exchange. Installs
+    * nothing: the frame plans as [[TopKPerKeyExec]] only on a session that
+    * carries [[TopKStrategy]].
+    */
+  def of(df: DataFrame, k: Int, keys: Seq[String],
+         order: Seq[(String, SortDirection)]): DataFrame = {
+    val lp = df.queryExecution.analyzed
+    def attr(n: String) = lp.output.find(_.name == n).get
+    GraftBridge.ofRows(df.sparkSession, TopKPerKey(k, keys.map(attr),
+      order.map { case (n, dir) => SortOrder(attr(n), dir) }, lp))
+  }
+}
+
 object TopKStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case t: TopKPerKey =>
       TopKPerKeyExec(t.k, t.keys, t.order, t.rnAttr, planLater(t.child)) :: Nil
     case _ => Nil
   }
-
-  /** Idempotent, race-free session registration — the one home for the
-    * `experimental.extraStrategies` mutation (mirrors `NGrams.register`).
-    * The bare check-then-append the ops used to inline is a read-modify-
-    * write on a plain var: two threads registering concurrently (a future
-    * parallel bench) could double-append or lose an unrelated strategy.
-    * Serialized on the session object; sessions built with
-    * `GraftExtensions` already carry the strategy via
-    * injectPlannerStrategy and skip the append.
-    */
-  def ensureRegistered(s: org.apache.spark.sql.SparkSession): Unit =
-    s.synchronized {
-      if (!s.experimental.extraStrategies.contains(this))
-        s.experimental.extraStrategies = s.experimental.extraStrategies :+ this
-    }
 }
 
 case class TopKPerKeyExec(

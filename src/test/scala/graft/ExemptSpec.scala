@@ -175,7 +175,7 @@ class ExemptSpec extends AnyFunSuite {
   }
 
   test("sim_brp_lsh: recall >= 0.9 vs exact euclidean pairs under threshold") {
-    graft.functions.VectorDot.register(spark)
+    GraftExtensions.install(spark)
     val e = T.embeddings(spark, sf).filter(col("vec_id") < 300)
       .select(col("vec_id"), col("embedding"),
         call_function("vec_dot", col("embedding"), col("embedding")).as("sq"))
@@ -379,8 +379,7 @@ class ExemptSpec extends AnyFunSuite {
     // every sim_embed_dedup pair (cosine >= 0.35, ids < 300) that falls in
     // ONE cluster must be counted by the op — and pairs the op scores are
     // never cross-cluster, so clusters with a singleton member report 0
-    import graft.functions.VectorDot
-    VectorDot.register(spark)
+    GraftExtensions.install(spark)
     val brutePairs = Registry.queries("sim_embed_dedup")(spark, sf)
       .select(col("a_id"), col("b_id")).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // recompute the op's cluster assignment via its own gated index

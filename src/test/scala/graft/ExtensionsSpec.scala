@@ -7,8 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * entry point — the "library user" path: a session built with
   * `.withExtensions` gets every native function, the DotProductFusion
   * rewrite, and the TopKPerKey planner strategy WITHOUT any runtime
-  * registration call. The ops register for themselves defensively; this
-  * spec is what proves a pure-SQL user needs none of that.
+  * registration call. Registry ops get the same function list through
+  * `GraftExtensions.install`; this spec is what proves a pure-SQL user
+  * needs none of that.
   *
   * A fresh session must be CREATED for extensions to apply (getOrCreate
   * returns an existing default session unchanged, and newSession() does
@@ -47,7 +48,8 @@ class ExtensionsSpec extends AnyFunSuite {
           |       char_ngrams('abc', 2)                                   AS c,
           |       simhash60(array('a', 'b'))                              AS s60,
           |       srp_sketch60(array_repeat(CAST(7 AS BIGINT), 64))       AS r60,
-          |       md5fold48('')                                           AS f48""".stripMargin)
+          |       md5fold48('')                                           AS f48,
+          |       mattr_sum_types(array('a','b','a','a','c'), 3)          AS m""".stripMargin)
         .head()
       assert(r.getDouble(0) == 11.0)
       assert(r.getString(1) == "é")
@@ -55,25 +57,29 @@ class ExtensionsSpec extends AnyFunSuite {
       assert(r.getSeq[String](3) == Seq("ab", "bc"))
       assert(!r.isNullAt(4) && !r.isNullAt(5))
       assert(r.getLong(6) == 0xd41d8cd98f00L)
+      val toks = Array[Any]("a", "b", "a", "a", "c")
+        .map(t => org.apache.spark.unsafe.types.UTF8String.fromString(t.toString))
+      assert(r.getLong(7) == functions.MattrSumTypes.compute(
+        new org.apache.spark.sql.catalyst.util.GenericArrayData(toks), 3))
     }
   }
 
   test("withExtensions session plans TopKPerKey with no runtime strategy registration") {
     withExtendedSession { s =>
-      import org.apache.spark.sql.catalyst.expressions.{Ascending, Descending, SortOrder}
+      import org.apache.spark.sql.catalyst.expressions.{Ascending, Descending}
       import org.apache.spark.sql.functions.col
       assert(s.experimental.extraStrategies.isEmpty, "test requires a clean session")
       val base = graft.ops.T.orders(s, TestSession.sf)
         .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"))
-      val lp = base.queryExecution.analyzed
-      def attr(n: String) = lp.output.find(_.name == n).get
-      val df = org.apache.spark.sql.GraftBridge.ofRows(s,
-        graft.plans.TopKPerKey(2, Seq(attr("o_custkey")),
-          Seq(SortOrder(attr("o_totalprice"), Descending),
-            SortOrder(attr("o_orderkey"), Ascending)), lp))
+      val df = graft.plans.TopKPerKey.of(base, 2, Seq("o_custkey"),
+        Seq("o_totalprice" -> Descending, "o_orderkey" -> Ascending))
       assert(df.queryExecution.executedPlan.toString.contains("TopKPerKey"))
+      assert(s.experimental.extraStrategies.isEmpty, "TopKPerKey.of must install nothing")
       val perKey = df.groupBy(col("o_custkey")).count().collect()
       assert(perKey.nonEmpty && perKey.forall(_.getLong(1) <= 2))
+      // the injected strategy already plans the node: install adds no copy
+      GraftExtensions.install(s)
+      assert(s.experimental.extraStrategies.isEmpty, "install duplicated the injected strategy")
     }
   }
 

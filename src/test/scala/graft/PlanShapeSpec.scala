@@ -245,7 +245,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // clusters, not from saturated band buckets (the 4-bit-band pathology
     // put ~N/16 of the corpus in EVERY bucket)
     import org.apache.spark.sql.functions._
-    graft.functions.Sketch60.register(spark)
+    GraftExtensions.install(spark)
     val docs = graft.ops.T.documents(spark, sf)
     val n = docs.count()
     val sh = docs
@@ -370,7 +370,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // proven separately by the DuckDB oracle, which computes the exact
     // result with no pruning at all)
     import org.apache.spark.sql.functions._
-    graft.functions.NGrams.register(spark)
+    GraftExtensions.install(spark)
     val docs = graft.ops.T.documents(spark, sf)
     val n = docs.count()
     val sh = docs.select(col("doc_id"), explode(

@@ -1,5 +1,11 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.Registry
 
@@ -111,5 +117,64 @@ class RegistrySpec extends AnyFunSuite {
       assert(df.columns.nonEmpty)
       assert(df.count() >= 0)
     }
+  }
+
+  /** The ops that call a graft native function or build a TopKPerKey
+    * frame, i.e. every op that once registered them itself. The last four
+    * reach the functions through the shared bpeLearn/dsirScores helpers.
+    */
+  private val extensionKeys = Seq(
+    "agg_kmv_distinct", "agg_kmv_intersect", "dedup_normalized_key",
+    "emb_matryoshka_trunc", "emb_srp_ann", "emb_srp_recall", "ml_ndcg_at_k",
+    "qc_dataset_fingerprint", "sample_per_group", "sem_dedup_clusters",
+    "serve_hybrid_search", "sim_containment_pairs", "sim_cosine_knn",
+    "sim_embed_dedup", "sim_ivf_knn", "sim_ivf_knn_det", "sim_ivf_pq",
+    "sim_knn_classify", "sim_lsh_tuning_curve", "sim_minhash_det",
+    "sim_prefix_filter_join", "sim_shingle_jaccard", "sim_simhash_bands",
+    "sim_simhash_shingle_bands", "txt_cdc_chunks", "txt_collocation_pmi",
+    "txt_lang_id", "txt_mattr_diversity", "txt_ngrams", "txt_repetition_ratio",
+    "txt_substring_dedup", "txt_unicode_nfc", "txt_winnowing", "win_topk_heap",
+    "txt_bpe_merges", "txt_bpe_encode", "txt_dsir_weight", "txt_dsir_resample")
+
+  // a new session has a fresh function registry and no extra strategies,
+  // whatever earlier suites installed on the shared one
+  for (name <- extensionKeys) {
+    test(s"op $name needs nothing beyond Registry.queries on a fresh session") {
+      val fresh = spark.newSession()
+      assert(!fresh.sessionState.functionRegistry.functionExists(FunctionIdentifier("vec_dot")) &&
+        fresh.experimental.extraStrategies.isEmpty, "test requires a fresh session")
+      // fails on a missing function or an unplannable TopKPerKey
+      Registry.queries(name)(fresh, sf).collect()
+    }
+  }
+
+  test("GraftExtensions.install is idempotent") {
+    val fresh = spark.newSession()
+    GraftExtensions.install(fresh)
+    // a stand-in builder survives a second install: nothing is re-registered
+    val registry = fresh.sessionState.functionRegistry
+    val id = FunctionIdentifier("vec_dot")
+    val (_, info, _) = GraftExtensions.functions.find(_._1 == id).get
+    val standIn: Seq[Expression] => Expression = _ => Literal(0.0)
+    registry.registerFunction(id, info, standIn)
+    GraftExtensions.install(fresh)
+    assert(registry.lookupFunctionBuilder(id).contains(standIn))
+    assert(fresh.experimental.extraStrategies.count(_ == plans.TopKStrategy) == 1)
+    for ((f, _, _) <- GraftExtensions.functions)
+      assert(registry.functionExists(f), s"$f not installed")
+  }
+
+  test("only GraftExtensions registers functions or planner strategies in src/main") {
+    val registration = "createOrReplaceTempFunction|registerFunction|extraStrategies\\s*=(?!=)".r
+    val offenders = Files.walk(Paths.get("src/main/scala")).iterator.asScala
+      .filter(p => p.toString.endsWith(".scala") &&
+        p.getFileName.toString != "GraftExtensions.scala")
+      .flatMap { p =>
+        Files.readAllLines(p).asScala.zipWithIndex.collect {
+          case (line, i) if registration.findFirstIn(line).isDefined => s"$p:${i + 1}: ${line.trim}"
+        }
+      }.toList
+    assert(offenders.isEmpty,
+      s"register through GraftExtensions' list, not per file: ${offenders.mkString("; ")}")
   }
 }
