@@ -1145,7 +1145,7 @@ object Scans {
   val scanFileMetadata = Op(
     "scan_file_metadata",
     (s, d) => {
-      s.read.parquet(s"$d/lineitem.parquet")
+      T.lineitem(s, d)
         .select(col("_metadata.file_name").as("file_name"),
           col("_metadata.file_size").as("file_size"),
           col("_metadata.row_index").as("ri"))

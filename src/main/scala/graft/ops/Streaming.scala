@@ -22,13 +22,13 @@ object Streaming {
     * schema, and ts has shipped as nanos-long (legacy NANOS fixtures, read
     * with nanosAsLong), native TIMESTAMP(MICROS), and naive-µs NTZ (cast
     * to LTZ under the pinned UTC session tz — see T.eventsRaw). Take the
-    * schema from a driver-side batch footer peek (cheap — one footer read,
-    * no scan) so the stream sees exactly what the batch reader sees, and
-    * normalize ts to TimestampType the same way the batch reader does.
+    * schema from T's footer-schema memo (no job once memoized) so the stream
+    * sees exactly what the batch reader sees, and normalize ts to
+    * TimestampType the same way the batch reader does.
     */
   private def readEventsStream(s: SparkSession, d: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val batchSchema = s.read.parquet(s"$d/events.parquet").schema
+    val batchSchema = T.schema(s, d, "events")
     val raw = s.readStream.schema(batchSchema)
       .option("pathGlobFilter", "events.parquet")
       .parquet(d)

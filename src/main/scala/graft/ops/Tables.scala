@@ -1,14 +1,41 @@
 package graft.ops
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
-/** One reader per fixture table (schemas: /root/repo/FIXTURES.md).
-  * Parquet carries the schema; we read as-is and never infer.
+/** One reader per fixture table (schemas: FIXTURES.md).
+  * Parquet carries the schema. Each table's footer schema is read once and
+  * memoized, so a table read launches no Spark job (see [[schema]]).
   */
 object T {
+  /** Footer schemas, one entry per path. Each holds the version it was read
+    * at: length and modification time (tests overwrite scratch fixture
+    * directories in place) and the session's `nanosAsLong`, under which
+    * events.ts reads as a long. A different version replaces the entry.
+    */
+  private val schemaMemo =
+    new java.util.concurrent.ConcurrentHashMap[String, ((Long, Long, String), StructType)]()
+
+  /** The footer schema of `dir/name.parquet`. Spark's own inference runs a
+    * one-task job per read, ~30-70 ms of fixed cost on every query, paid
+    * again on each warm run; the memo pays it once per table version.
+    */
+  def schema(s: SparkSession, dir: String, name: String): StructType = {
+    val path = new Path(s"$dir/$name.parquet")
+    val st = path.getFileSystem(s.sparkContext.hadoopConfiguration).getFileStatus(path)
+    val nanos = s.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
+    val version = (st.getLen, st.getModificationTime, nanos)
+    schemaMemo.compute(path.toString, (p, memo) =>
+      if (memo != null && memo._1 == version) memo
+      else (version, s.read.parquet(p).schema))._2
+  }
+
+  /** A fresh relation on every call: never cache the DataFrame, self-joins
+    * (e.g. qc_fk_orphans) need fresh attribute ids. */
   def read(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    s.read.schema(schema(s, dir, name)).parquet(s"$dir/$name.parquet")
 
   /** events.ts has shipped in three parquet encodings across fixture
     * generations: TIMESTAMP(NANOS) (Spark 4 refuses it outright —

@@ -92,7 +92,9 @@ class RegistrySpec extends AnyFunSuite {
     // BASELINE.md round-14: zstd spill blocks turn the graph tier's 60 GB
     // sf100 ENOSPC into an 8.7–17.2 GB peak. GraftSession applies the
     // recipe; this pin fails if a builder drops it. Spill compression is
-    // governed by the SparkContext's conf, not the session's.
+    // governed by the SparkContext's conf, not the session's. The same list
+    // sizes the codegen cache, a static SQL conf that must also be on the
+    // context; WarmRunSpec checks that a warm re-run then compiles nothing.
     val ctx = spark.sparkContext.getConf
     for ((k, v) <- SpillDefaults.configs)
       assert(ctx.get(k, "<unset>") == v, s"$k != $v in the live SparkContext")
